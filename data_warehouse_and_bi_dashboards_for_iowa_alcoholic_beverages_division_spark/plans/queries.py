@@ -2605,8 +2605,8 @@ def q83(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM walk GROUP BY node
     """,
     "Near-dup clustering: blocked exact-Jaccard matches (q75's edge "
-    "set at >= 0.5) grouped into connected components by iterative "
-    "min-label propagation (operators/graph.py) — cluster id = min doc "
+    "set at >= 0.5) grouped into connected components by large-star/"
+    "small-star contraction (operators/graph.py) — cluster id = min doc "
     "id reachable, keep = canonical member. The DuckDB oracle computes "
     "the same components via a recursive transitive closure, so the "
     "iterative distributed algorithm is value-checked end to end. "
@@ -8926,7 +8926,7 @@ def _q187_oracle() -> str:
     "under the block normalizer, shingle-visible) so recall through "
     "block -> shingle -> jaccard -> components -> argmax is exercised "
     "for real, planted-duplicates-benchmark style. Spark reuses the "
-    "iterative min-label-propagation components (operators/graph.py) "
+    "large-star/small-star connected components (operators/graph.py) "
     "and ranks members with one window partitioned BY CLUSTER "
     "(distributed - no global window); the DuckDB twin recomputes "
     "components via recursive closure, value-checking end to end",
@@ -9388,8 +9388,8 @@ def _q190_oracle() -> str:
     "SemDeDup-style semantic deduplication (Abbas et al. 2023): "
     "embedding-cosine near-dup pairs (q40's hyperplane sign-bucket "
     "blocking - candidates only within a bucket, never all-pairs) "
-    "grouped into connected components by iterative min-label "
-    "propagation, one representative kept per cluster, pruned count "
+    "grouped into connected components by large-star/small-star "
+    "contraction, one representative kept per cluster, pruned count "
     "reported. This is the full semantic-dedup decision pipeline "
     "pairs->clusters->keep-list as one composition; the DuckDB twin "
     "recomputes the identical planes/threshold and a recursive "
@@ -9413,14 +9413,13 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.35, n_planes=p).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    # star, not min-label: a loose cosine threshold (0.35) chains
-    # semantic neighbors into long paths — measured diameter ~23 at
-    # sf1.0, i.e. 24 min-label rounds (12.9 s) vs O(log d) star rounds
-    # (8.2 s), identical labels. Text dedup graphs (q84/q187) stay
-    # min-label: their clusters are dense little cliques, d ~ 2-3.
-    comp = connected_components(
-        emb.select(F.col("vec_id").alias("node")), pairs, algorithm="star"
-    )
+    # a loose cosine threshold (0.35) chains semantic neighbors into
+    # long paths — measured diameter ~23 at sf1.0. Propagating labels
+    # hop by hop would need a round per hop; each large-star/small-star
+    # round re-hooks whole neighborhoods onto their minimum, contracting
+    # paths geometrically, so rounds grow as O(log d): 6 rounds at
+    # sf1.0, well inside the default max_iter.
+    comp = connected_components(emb.select(F.col("vec_id").alias("node")), pairs)
     return (
         comp.groupBy(F.col("comp").alias("cluster_id"))
         .agg(
