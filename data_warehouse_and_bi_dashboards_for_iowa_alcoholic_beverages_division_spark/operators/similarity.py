@@ -1,17 +1,31 @@
 """Similarity search over embedding columns (`array<float>`).
 
-Two paths, same contract (query ids → top-k neighbor ids):
+Top-k search, one contract (query ids → top-k neighbor ids):
 
-- **brute force** — broadcast the (small) query set against the corpus;
-  dot products via ``zip_with``/``aggregate`` entirely JVM-side. The
-  corpus is never shuffled: each partition scores its rows against the
-  broadcast queries and a TakeOrderedAndProject per query finishes it.
-  This is the exact baseline and stays viable at any corpus size as
-  long as the query batch is broadcastable.
-- **LSH-bucketed (random hyperplanes)** — the scale path: corpus rows
-  hash to sign-pattern buckets of fixed hyperplanes; queries probe only
-  their own bucket. Hyperplanes are derived deterministically from a
-  seed, so results are reproducible.
+- **brute force** (:func:`cosine_topk`) — broadcast the (small) query
+  set against the corpus; dot products via ``zip_with``/``aggregate``
+  entirely JVM-side. The corpus is never shuffled: each partition
+  scores its rows against the broadcast queries and a
+  TakeOrderedAndProject per query finishes it. This is the exact
+  baseline and stays viable at any corpus size as long as the query
+  batch is broadcastable.
+- **LSH-bucketed (random hyperplanes)** (:func:`cosine_topk_lsh`) —
+  corpus rows hash to sign-pattern buckets of fixed hyperplanes;
+  queries probe only their own bucket. Hyperplanes are derived
+  deterministically from a seed, so results are reproducible.
+- **IVF** — rows are inverted-listed by a coarse quantizer and each
+  query scores only the rows of its probed cells. In-plan:
+  :func:`cosine_topk_ivf` / :func:`cosine_topk_ivf2`. Persisted: ONE
+  index lifecycle — build → append → query → update → delete →
+  compact → audit → rebalance → recover (``*_ivf_index``) — over
+  inverted lists ``(id, vec, cell)`` partitioned by cell. Two
+  quantizers route rows into those lists (:class:`_Quantizer`): flat
+  (argmax cell, :func:`build_ivf_index`) and two-level (supercell →
+  best member cell, :func:`build_ivf2_index`). The build records which
+  one in the index's ``_centroids`` sidecar, and every later step reads
+  it from there.
+- **PQ / IVF-PQ** (:func:`pq_adc_topk`, :func:`ivfpq_topk`) —
+  product-quantized codes scored by asymmetric distance.
 """
 
 from __future__ import annotations
@@ -59,7 +73,7 @@ def _checked_norm(nv: Column) -> Column:
     cross-engine hash break, surfaced instead as a job error at
     build/append/train time. The same wrapper guards the QUERY side
     (the ``qn`` bindings of cosine_topk / cosine_topk_lsh /
-    cosine_topk_ivf / query_ivf_index / the ivf2 probe): a zero-norm
+    the IVF probes, :func:`_probe_side`): a zero-norm
     query vector would otherwise return NaN-ranked neighbors instead
     of failing (code-review r13). Error text matches the local path's
     so callers/tests can match "zero-norm" on either.
@@ -818,6 +832,194 @@ def ivf_train_centroids(
     return centroids
 
 
+def _probe_side(queries: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, q_vec, qn) — the query projection every IVF probe
+    starts from; the norm rides the row (the cosine_topk note) and is
+    zero-norm guarded (:func:`_checked_norm`)."""
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
+    )
+
+
+def _score_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
+    """Score probed queries (query_id, q_vec, qn, cell) against the
+    inverted-list rows (neighbor_id, c_vec, cn, cell) of the cells they
+    selected: broadcast the (tiny) probe table, equi-join on cell, exact
+    cosine, per-query top-k with neighbor-id tiebreak. Returns
+    (query_id, neighbor_id, score, rank)."""
+    scored = (
+        F.broadcast(q)
+        .join(c, on="cell", how="inner")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        # norms ride the row projections (the cosine_topk note);
+        # scores bit-identical to the per-pair cosine_expr form
+        .select(
+            "query_id",
+            "neighbor_id",
+            floor_round6(
+                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
+            ).alias("score"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+
+
+def _in_plan_lists(corpus: DataFrame, quant: _Quantizer, id_col: str, vec_col: str) -> DataFrame:
+    """(neighbor_id, c_vec, cn, cell): the in-plan inverted lists of the
+    ``cosine_topk_ivf*`` family. The scan is widened BEFORE the
+    O(N x n_cells) routing fold: an embeddings scan is few bytes per
+    FLOP (sf10 = 200k vectors in ~2 parquet splits), so without this the
+    whole assignment runs in 1-2 tasks — measured 1029 s single-task vs
+    ~40 s wide at sf10. At real scale the scan is already wide and this
+    is a no-op (no shuffle). ``cn`` is bound as the two-level member
+    argmax's row norm."""
+    return quant.route(
+        _spread_narrow_scan(
+            corpus.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("c_vec"),
+                norm_expr(F.col(vec_col)).alias("cn"),
+            ),
+            "neighbor_id",
+        ),
+        "c_vec",
+        norm="cn",
+    )
+
+
+class _Quantizer:
+    """The one layout-specific piece of an IVF index: how a vector is
+    routed to a cell.
+
+    - flat (``supers is None``): the argmax-cosine cell over ``cells``;
+    - two-level (:func:`ivf2_train`): the argmax supercell over
+      ``supers``, then the best member cell of that supercell
+      (``cell2super`` maps every cell to its supercell) — O(sqrt
+      n_cells) scores per row instead of n_cells.
+
+    Everything else in the index lifecycle is shared by both layouts:
+    the inverted lists ``(id, vec, cell)`` partitioned by cell,
+    tombstones, compaction, the atomic cell swap and scoring. So the
+    quantizer does exactly three jobs: route rows (:meth:`route`), rank
+    a query's probe cells (:meth:`probe`), and persist itself
+    (:meth:`write` / :meth:`load`: the ``_centroids`` sidecar, plus
+    ``_supers`` for two-level). Cell ids are list positions in
+    ``cells``."""
+
+    def __init__(
+        self,
+        cells: list[list[float]],
+        supers: list[list[float]] | None = None,
+        cell2super: dict[int, int] | None = None,
+    ):
+        self.cells = cells
+        self.supers = supers
+        self.cell2super = cell2super
+        self._members = None
+
+    @classmethod
+    def load(cls, spark, path: str) -> _Quantizer:
+        """Read the quantizer from the index's sidecars. ``_centroids``
+        is read once with the two-level schema whatever the layout: a
+        flat sidecar has no ``supercell`` column, so it reads NULL in
+        every row and telling the layouts apart costs no extra job.
+        ``_supers`` is read only for a two-level index."""
+        cents = _read_centroids(spark, path)
+        cells = [v for v, _ in cents.values()]
+        if all(s is None for _, s in cents.values()):
+            return cls(cells)
+        srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
+        return cls(
+            cells,
+            [[float(x) for x in r["centroid"]] for r in srows],
+            {c: s for c, (_, s) in cents.items()},
+        )
+
+    def write(self, spark, path: str) -> None:
+        c2s = self.cell2super or {}
+        _write_centroids(spark, path, {i: (c, c2s.get(i)) for i, c in enumerate(self.cells)})
+        if self.supers is not None:
+            _write_driver_rows(
+                spark, list(enumerate(self.supers)), _SIDECAR_SUPERS_SCHEMA, path + "_supers"
+            )
+
+    def _member_table(self, spark) -> DataFrame:
+        # one DataFrame per quantizer: the corpus and query sides of an
+        # in-plan search broadcast the same plan, so the exchange is reused
+        if self._members is None:
+            self._members = _member_table_df(spark, self.cells, self.cell2super)
+        return self._members
+
+    def route(self, df: DataFrame, vec_col: str, norm: str | None = None) -> DataFrame:
+        """``df`` plus ``cell``. Map-only in both layouts: the flat (and
+        supercell) argmax is :func:`with_assigned_cell`; the member argmax
+        folds the winning supercell's broadcast member array, so no
+        vector ever shuffles. ``norm`` names a column already holding
+        ``norm_expr(vec_col)``, bound as the member argmax's row norm
+        (the flat argmax binds its own)."""
+        if self.supers is None:
+            return with_assigned_cell(df, vec_col, self.cells)
+
+        def best_member(nv: Column) -> Column:
+            return F.array_max(
+                F.transform(
+                    F.col("_mcents"),
+                    lambda e: F.struct(
+                        floor_round6(
+                            dot_expr(F.col(vec_col), e["cvec"]) / (nv * e["cnorm"])
+                        ).alias("s"),
+                        e["c"].alias("c"),
+                    ),
+                )
+            )["c"]
+
+        nv = F.col(norm) if norm else norm_expr(F.col(vec_col))
+        return (
+            with_assigned_cell(df, vec_col, self.supers, out_col="_super")
+            .join(F.broadcast(self._member_table(df.sparkSession)), "_super")
+            .select(
+                *df.columns,
+                F.element_at(F.transform(F.array(nv), best_member), 1).alias("cell"),
+            )
+        )
+
+    def probe(self, q: DataFrame, n_probe: int, n_super_probe: int = 2) -> DataFrame:
+        """(query_id, q_vec, qn) -> one (query_id, q_vec, qn, cell) row
+        per probed cell: the ``n_probe`` best cells (flat), or the
+        ``n_probe`` best member cells of the ``n_super_probe`` best
+        supercells (two-level; ``n_super_probe`` is ignored by flat)."""
+        cols = ("query_id", "q_vec", "qn")
+        if self.supers is None:
+            return (
+                with_probe_cells(q, "q_vec", self.cells, n_probe)
+                .select(*cols, F.explode("_probes").alias("probe"))
+                .select(*cols, F.col("probe.c").alias("cell"))
+            )
+        qs = (
+            with_probe_cells(q, "q_vec", self.supers, n_super_probe, out_col="_sprobes")
+            .select(*cols, F.explode("_sprobes").alias("sp"))
+            .select(*cols, F.col("sp.c").alias("_super"))
+            .join(F.broadcast(self._member_table(q.sparkSession)), "_super")
+            .select(*cols, F.explode("_mcents").alias("mc"))
+            .select(
+                *cols,
+                F.col("mc.c").alias("cell"),
+                floor_round6(
+                    dot_expr(F.col("q_vec"), F.col("mc.cvec")) / (F.col("qn") * F.col("mc.cnorm"))
+                ).alias("_cs"),
+            )
+        )
+        wq = Window.partitionBy("query_id").orderBy(F.col("_cs").desc(), F.col("cell").desc())
+        return (
+            qs.withColumn("_rn", F.row_number().over(wq))
+            .where(F.col("_rn") <= n_probe)
+            .select(*cols, "cell")
+        )
+
+
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -859,66 +1061,16 @@ def cosine_topk_ivf(
     filtered (a deleted id may still ask for neighbors), and ranks are
     assigned after the exclusion — a deleted neighbor frees its rank."""
     train = corpus.where(train_where) if train_where else corpus
-    centroids = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
+    quant = _Quantizer(ivf_train_centroids(train, id_col, vec_col, n_cells, iters))
     if tombstones_where:
         # IS NOT TRUE semantics, not ~pred: a row where the predicate
         # evaluates NULL is NOT deleted (a NULL id never matches a
         # tombstone in the persisted anti-join this mirrors; bare
         # ~NULL = NULL would silently drop it here)
         corpus = corpus.where(~F.coalesce(F.expr(tombstones_where), F.lit(False)))
-
-    # widen BEFORE the O(N x n_cells) scoring fold: an embeddings scan
-    # is few bytes per FLOP (sf10 = 200k vectors in ~2 parquet splits),
-    # so without this the ENTIRE final assignment runs in 1-2 tasks —
-    # measured 1029 s single-task vs ~40 s wide at sf10. Training
-    # already spreads inside ivf_train_centroids; this is the same
-    # lesson applied to the one remaining full-corpus pass. At real
-    # scale the scan is already wide and this is a no-op (no shuffle).
-    c = with_assigned_cell(
-        _spread_narrow_scan(
-            corpus.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                norm_expr(F.col(vec_col)).alias("cn"),
-            ),
-            "neighbor_id",
-        ),
-        "c_vec",
-        centroids,
-    )
-
-    # rank cells per query and keep the n_probe best
-    q = (
-        with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            centroids,
-            n_probe,
-        )
-        .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
-        .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
-    )
-
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # norms ride the row projections (the cosine_topk note);
-        # scores bit-identical to the per-pair cosine_expr form
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    c = _in_plan_lists(corpus, quant, id_col, vec_col)
+    q = quant.probe(_probe_side(queries, id_col, vec_col), n_probe)
+    return _score_topk(q, c, k)
 
 
 def _member_table_df(spark, l2: list[list[float]], cell2super: dict[int, int]) -> DataFrame:
@@ -996,123 +1148,6 @@ def ivf2_train(
     return l2, l1, cell2super
 
 
-def _ivf2_corpus_lists(
-    corpus: DataFrame,
-    members: DataFrame,
-    l1: list[list[float]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Corpus rows routed level-1 supercell -> best member cell
-    (map-only: the supercell argmax is :func:`with_assigned_cell`, the
-    member argmax folds a per-super broadcast array — no vector ever
-    shuffles). Returns (neighbor_id, c_vec, cn, cell) — the
-    hierarchical inverted lists."""
-
-    def best_member(nv: Column) -> Column:
-        return F.array_max(
-            F.transform(
-                F.col("_mcents"),
-                lambda e: F.struct(
-                    floor_round6(
-                        dot_expr(F.col("c_vec"), e["cvec"]) / (nv * e["cnorm"])
-                    ).alias("s"),
-                    e["c"].alias("c"),
-                ),
-            )
-        )["c"]
-
-    return (
-        with_assigned_cell(
-            _spread_narrow_scan(
-                corpus.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(vec_col).alias("c_vec"),
-                    norm_expr(F.col(vec_col)).alias("cn"),
-                ),
-                "neighbor_id",
-            ),
-            "c_vec",
-            l1,
-            out_col="_super",
-        )
-        .join(F.broadcast(members), "_super")
-        # cn IS norm_expr(c_vec) — reuse it as the bound row norm
-        .select(
-            "neighbor_id",
-            "c_vec",
-            "cn",
-            F.element_at(F.transform(F.array(F.col("cn")), best_member), 1).alias("cell"),
-        )
-    )
-
-
-def _ivf2_probe_cells(
-    queries: DataFrame,
-    members: DataFrame,
-    l1: list[list[float]],
-    id_col: str,
-    vec_col: str,
-    n_super_probe: int,
-    n_probe: int,
-) -> DataFrame:
-    """Query side of the hierarchical probe: top ``n_super_probe``
-    supercells -> member-cell ranking -> ``n_probe`` cells. Returns
-    (query_id, q_vec, qn, cell)."""
-    qs = (
-        with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            l1,
-            n_super_probe,
-            out_col="_sprobes",
-        )
-        .select("query_id", "q_vec", "qn", F.explode("_sprobes").alias("sp"))
-        .select("query_id", "q_vec", "qn", F.col("sp.c").alias("_super"))
-        .join(F.broadcast(members), "_super")
-        .select("query_id", "q_vec", "qn", F.explode("_mcents").alias("mc"))
-        .select(
-            "query_id",
-            "q_vec",
-            "qn",
-            F.col("mc.c").alias("cell"),
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("mc.cvec")) / (F.col("qn") * F.col("mc.cnorm"))
-            ).alias("_cs"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("_cs").desc(), F.col("cell").desc())
-    return (
-        qs.withColumn("_rn", F.row_number().over(wq))
-        .where(F.col("_rn") <= n_probe)
-        .select("query_id", "q_vec", "qn", "cell")
-    )
-
-
-def _ivf2_score_topk(q: DataFrame, c: DataFrame, k: int) -> DataFrame:
-    """Score probed queries against the inverted lists they selected:
-    broadcast the (tiny) probe table, equi-join on cell, exact cosine,
-    per-query top-k. Returns (query_id, neighbor_id, score, rank)."""
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
 def cosine_topk_ivf2(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1133,172 +1168,10 @@ def cosine_topk_ivf2(
     union of those supers' member cells, keep ``n_probe``, and score
     only those inverted lists. Per-row assignment work drops from
     O(n_cells) to O(sqrt n_cells) both build- and query-side."""
-    spark = corpus.sparkSession
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
-    members = _member_table_df(spark, l2, cell2super)
-    c = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
-    q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
-    return _ivf2_score_topk(q, c, k)
-
-
-def build_ivf2_index(
-    corpus: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 8,
-    iters: int = 2,
-    train_where: str | None = None,
-) -> tuple[list[list[float]], list[list[float]], dict[int, int]]:
-    """Persist a HIERARCHICAL IVF index — :func:`build_ivf_index`'s
-    contract at the two-level scale path: train the two-level quantizer
-    (:func:`ivf2_train` — sampled level-2 Lloyd, driver-local level-1),
-    route every corpus row supercell -> best member cell (map-only),
-    write the inverted lists ``partitionBy("cell")`` with the row norm
-    precomputed, and store both centroid levels + the cell->supercell
-    map as tiny sidecars. At 10^9 vectors this is the layout a serving
-    tier wants: the expensive corpus pass happens once, per-row routing
-    cost is O(sqrt n_cells), and every query batch reads only its
-    probed cells' files via partition pruning."""
-    spark = corpus.sparkSession
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
-    members = _member_table_df(spark, l2, cell2super)
-    # repartition ON the partition column before the partitioned write:
-    # with derived capacities the cell count is large (2048 at 2M
-    # vectors), and a direct partitionBy write fans every assignment
-    # task across every cell — tasks x cells files (65k at sf10; at
-    # cluster scale, executors x cells — a metadata explosion the
-    # serving tier pays on every probe). One corpus shuffle at build
-    # buys ~one file per cell. The flat build/appends apply the same
-    # device since r15 (measured: the direct write put 391 files under
-    # q199's 2000-row sf0.1 index; the commit's sequential renames and
-    # the per-file footer reads of every later scan dominated walls).
-    lists = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
-    # drop a previous build's schema pin before the data overwrite,
-    # re-record after (the build_ivf_index note)
-    _drop_index_schema(spark, path)
-    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
-    _write_index_schema(spark, path, lists)
-    _write_driver_rows(
-        spark,
-        [(i, c, cell2super[i]) for i, c in enumerate(l2)],
-        _SIDECAR_CENTROIDS2_SCHEMA,
-        path + "_centroids",
-    )
-    _write_driver_rows(
-        spark, [(i, c) for i, c in enumerate(l1)], _SIDECAR_SUPERS_SCHEMA, path + "_supers"
-    )
-    return l2, l1, cell2super
-
-
-def append_to_ivf2_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    skip_existing_ids: bool = True,
-    batch_token: str | None = None,
-) -> None:
-    """Incremental maintenance for the HIERARCHICAL index —
-    :func:`append_to_ivf_index`'s contract (frozen quantizer, append
-    only the batch's inverted-list rows, same two idempotency guards
-    with the same cost contracts and failure semantics) on the
-    two-level layout: the batch routes supercell -> best member cell
-    under the sidecar quantizer, O(sqrt n_cells) per row instead of
-    the flat append's O(n_cells). Like the flat append, a batch
-    containing a currently-TOMBSTONED id raises with the
-    compact-first instruction (see :func:`delete_from_ivf2_index`) —
-    proceeding would lose the new vector silently under either
-    idempotency guard."""
-    spark = new_vectors.sparkSession
-    # heal any crashed maintenance swap first (the flat append's note)
-    recover_ivf_index(spark, path)
-    if batch_token is not None:
-        if _count_batch_token(spark, path + "_batches", batch_token):
-            return
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
-    if tombs is not None:
-        clash = (
-            new_vectors.select(F.col(id_col).alias("neighbor_id"))
-            .join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_semi")
-            .limit(5)
-            .collect()
-        )
-        if clash:
-            raise ValueError(
-                f"append batch contains tombstoned id(s) {[r[0] for r in clash]}: "
-                "use update_in_ivf2_index (or run compact_ivf2_index) before "
-                "re-inserting a deleted id "
-                "(appending now would be silently hidden by the tombstone "
-                "and removed by the next compaction)"
-            )
-    crows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
-    l2 = [[float(x) for x in r["centroid"]] for r in crows]
-    cell2super = {r["cell"]: r["supercell"] for r in crows}
-    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
-    l1 = [[float(x) for x in r["centroid"]] for r in srows]
-    members = _member_table_df(spark, l2, cell2super)
-    batch = new_vectors
-    if skip_existing_ids:
-        existing = _read_index(spark, path).select(F.col("neighbor_id").alias(id_col))
-        batch = batch.join(existing, on=id_col, how="left_anti")
-    # repartition on the partition column before the partitioned write
-    # (the build's device, applied to the append too — without it each
-    # batch adds tasks x touched-cells files to the serving layout)
-    _ivf2_corpus_lists(batch, members, l1, id_col, vec_col).repartition(
-        F.col("cell")
-    ).write.mode("append").partitionBy("cell").parquet(path)
-    if batch_token is not None:
-        _write_driver_rows(
-            spark, [(batch_token,)], _SIDECAR_BATCHES_SCHEMA, path + "_batches", mode="append"
-        )
-
-
-def query_ivf2_index(
-    queries: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 3,
-    n_super_probe: int = 2,
-) -> DataFrame:
-    """Top-k against a persisted hierarchical index: rebuild the
-    (driver-resident) quantizer from the sidecars, probe
-    ``n_super_probe`` supercells -> ``n_probe`` member cells per query
-    (the exact :func:`_ivf2_probe_cells` ranking), and read ONLY the
-    probed cells' files (static partition filter on the inverted-list
-    scan — the q156 pruning device on the two-level layout). Values are
-    identical to the in-plan :func:`cosine_topk_ivf2` because the
-    persisted lists carry the same (c_vec, cn) and the probe/score
-    devices are shared verbatim. Tombstoned ids
-    (:func:`delete_from_ivf2_index`) are anti-joined out of the
-    candidate side before scoring — the flat
-    :func:`query_ivf_index` exclusion on the hierarchical layout:
-    deletes are visible without any file rewrite, and ranks assigned
-    after the exclusion free a deleted neighbor's rank."""
-    spark = queries.sparkSession
-    crows = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
-    l2 = [[float(x) for x in r["centroid"]] for r in crows]
-    cell2super = {r["cell"]: r["supercell"] for r in crows}
-    srows = _sidecar_rows(spark, path + "_supers", _SIDECAR_SUPERS_SCHEMA, "supercell")
-    l1 = [[float(x) for x in r["centroid"]] for r in srows]
-    members = _member_table_df(spark, l2, cell2super)
-    q = _ivf2_probe_cells(queries, members, l1, id_col, vec_col, n_super_probe, n_probe)
-    # q is consumed twice (probed-cell collect, then the broadcast
-    # join); checkpoint so the probe ranking runs once
-    q = q.localCheckpoint(eager=True)
-    # dedup driver-side: q is ≤ queries x n_probe rows (already
-    # materialized above), and .distinct() before the collect costs an
-    # extra shuffle + AQE job for a set the driver builds in microseconds
-    probed = sorted({r["cell"] for r in q.select("cell").collect()})
-    c = _read_index(spark, path).where(F.col("cell").isin(probed))
-    tombs = _read_optional_sidecar(spark, path + "_tombstones")
-    if tombs is not None:
-        # tiny sidecar (compaction resets it) — broadcast anti-join,
-        # the candidate lists never shuffle
-        c = c.join(F.broadcast(tombs.select("neighbor_id")), on="neighbor_id", how="left_anti")
-    return _ivf2_score_topk(q, c, k)
+    quant = _Quantizer(*ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where))
+    c = _in_plan_lists(corpus, quant, id_col, vec_col)
+    q = quant.probe(_probe_side(queries, id_col, vec_col), n_probe, n_super_probe)
+    return _score_topk(q, c, k)
 
 
 def ivf2_recall_sweep(
@@ -1332,10 +1205,8 @@ def ivf2_recall_sweep(
     query-side probes, not C corpus scans. At index scale a deployment
     runs this sweep against an already-persisted index (q156/q199's
     device); the in-plan cache is the sweep-as-one-query equivalent."""
-    spark = corpus.sparkSession
-    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
-    members = _member_table_df(spark, l2, cell2super)
-    c = _ivf2_corpus_lists(corpus, members, l1, id_col, vec_col)
+    quant = _Quantizer(*ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where))
+    c = _in_plan_lists(corpus, quant, id_col, vec_col)
     exact = cosine_topk(corpus, queries, id_col, vec_col, k).select(
         "query_id", "neighbor_id"
     )
@@ -1346,10 +1217,8 @@ def ivf2_recall_sweep(
 
     per_combo = []
     for n_super_probe, n_probe in combos:
-        q = _ivf2_probe_cells(
-            queries, members, l1, id_col, vec_col, n_super_probe, n_probe
-        )
-        approx = _ivf2_score_topk(q, c, k).select("query_id", "neighbor_id")
+        q = quant.probe(_probe_side(queries, id_col, vec_col), n_probe, n_super_probe)
+        approx = _score_topk(q, c, k).select("query_id", "neighbor_id")
         hits = (
             approx.join(exact, ["query_id", "neighbor_id"])
             .groupBy("query_id")
@@ -1381,6 +1250,62 @@ def ivf2_recall_sweep(
     )
 
 
+def _build_index(
+    corpus: DataFrame, path: str, quant: _Quantizer, id_col: str, vec_col: str
+) -> None:
+    """Write the inverted lists ``(id_col, vec_col, cell)`` of
+    ``corpus`` routed by ``quant``, partitioned by cell, then the
+    schema pin and the quantizer's sidecars — one body for both
+    layouts.
+
+    The scan is widened before the corpus-wide routing fold (the
+    :func:`_in_plan_lists` note), and the routed rows are repartitioned
+    ON the partition column before the partitioned write: the routing
+    runs wide, so a direct partitionBy write fans every task across
+    every cell — tasks x cells files (391 four-KB files for q199's sf0.1
+    index; at a derived capacity of 2^12 cells, executors x 4096 — a
+    metadata explosion every probe, audit, and the driver-side job
+    commit pay for). The cell shuffle moves only (id, vec, cell) rows
+    once and lands ~one file per cell; the routing fold itself still
+    runs map-side, before the exchange. Zero-norm corpus rows (even
+    outside a train subset) raise inside the routing expression
+    (:func:`_checked_norm`) — no separate guard pass."""
+    spark = corpus.sparkSession
+    lists = quant.route(
+        _spread_narrow_scan(corpus.select(F.col(id_col), F.col(vec_col)), id_col), vec_col
+    )
+    _drop_stale_sidecars(spark, path)
+    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
+    _write_index_schema(spark, path, lists)
+    quant.write(spark, path)
+
+
+def build_ivf2_index(
+    corpus: DataFrame,
+    path: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_cells: int = 8,
+    iters: int = 2,
+    train_where: str | None = None,
+) -> tuple[list[list[float]], list[list[float]], dict[int, int]]:
+    """Persist a HIERARCHICAL IVF index — :func:`build_ivf_index` with
+    the two-level quantizer (:func:`ivf2_train` — sampled level-2
+    Lloyd, driver-local level-1): every corpus row routes supercell ->
+    best member cell (map-only), and both centroid levels plus the
+    cell->supercell map are stored as tiny sidecars. The inverted lists
+    have the flat layout, so every other lifecycle step
+    (:func:`append_to_ivf_index`, :func:`query_ivf_index`, delete,
+    compact, update, rebalance, audit, recover) serves this index
+    unchanged. At 10^9 vectors this is the layout a serving tier wants:
+    the expensive corpus pass happens once, per-row routing cost is
+    O(sqrt n_cells), and every query batch reads only its probed cells'
+    files via partition pruning."""
+    l2, l1, cell2super = ivf2_train(corpus, id_col, vec_col, n_cells, iters, train_where)
+    _build_index(corpus, path, _Quantizer(l2, l1, cell2super), id_col, vec_col)
+    return l2, l1, cell2super
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -1403,43 +1328,13 @@ def build_ivf_index(
     economics applied to the persisted build: Lloyd is O(|train| x
     n_cells) per iteration, so sampling removes ``iters`` full-corpus
     scoring passes and leaves the final list-writing assignment as the
-    only O(N x n_cells) stage."""
-    spark = corpus.sparkSession
+    only O(N x n_cells) stage.
+
+    A build at the path of an earlier index replaces it whole: its
+    tombstones, schema pin and two-level sidecar go with its data."""
     train = corpus.where(train_where) if train_where else corpus
     centroids = ivf_train_centroids(train, id_col, vec_col, n_cells, iters)
-    # zero-norm corpus rows (even outside the train subset) raise
-    # inside the list-writing assignment expression (_checked_norm)
-    # — no separate guard pass over the corpus
-    # widen the scan before the corpus-wide scoring fold (the
-    # cosine_topk_ivf note: single-split embedding scans serialize it)
-    # repartition ON the partition column before the partitioned write
-    # (the build_ivf2_index device, measured to matter here too): the
-    # assignment runs wide (spread above at small SF, the scan's own
-    # splits at scale), so a direct partitionBy write fans every
-    # assignment task across every cell — tasks x cells files (391
-    # four-KB files for q199's sf0.1 index; at a derived capacity of
-    # 2^12 cells, executors x 4096 — a metadata explosion every probe,
-    # audit, and the driver-side job commit pay for). The cell shuffle
-    # moves only (id, vec, cell) rows once and lands ~one file per
-    # cell; the assignment fold itself still runs map-side, before the
-    # exchange.
-    lists = with_assigned_cell(
-        _spread_narrow_scan(corpus.select(F.col(id_col), F.col(vec_col)), id_col),
-        vec_col,
-        centroids,
-    )
-    # stale-schema window closed: drop any previous build's schema pin
-    # BEFORE overwriting the data, re-record it after (readers between
-    # the two fall back to inference — see _write_index_schema)
-    _drop_index_schema(spark, path)
-    lists.repartition(F.col("cell")).write.mode("overwrite").partitionBy("cell").parquet(path)
-    _write_index_schema(spark, path, lists)
-    _write_driver_rows(
-        spark,
-        [(i, c) for i, c in enumerate(centroids)],
-        _SIDECAR_CENTROIDS_SCHEMA,
-        path + "_centroids",
-    )
+    _build_index(corpus, path, _Quantizer(centroids), id_col, vec_col)
     return centroids
 
 
@@ -1449,8 +1344,10 @@ def build_ivf_index(
 # ~0.1 s of driver planning per inferred read, several times per
 # index operation. (The _tombstones sidecar keeps inference: its id
 # column's name and type follow the caller's DataFrame.)
-_SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>"
-_SIDECAR_CENTROIDS2_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
+# ``_centroids`` is read with the two-level schema for both layouts (a
+# flat index writes it without ``supercell``, which then reads NULL).
+_SIDECAR_FLAT_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>"
+_SIDECAR_CENTROIDS_SCHEMA = "cell INT, centroid ARRAY<DOUBLE>, supercell INT"
 _SIDECAR_SUPERS_SCHEMA = "supercell INT, centroid ARRAY<DOUBLE>"
 _SIDECAR_BATCHES_SCHEMA = "token STRING"
 
@@ -1462,6 +1359,26 @@ def _sidecar_rows(spark, path: str, schema: str, key: str):
     costs a range-partitioner sampling job on top of the collect — the
     r15 profile showed three jobs per sidecar read where one suffices."""
     return sorted(spark.read.schema(schema).parquet(path).collect(), key=lambda r: r[key])
+
+
+def _read_centroids(spark, path: str) -> dict[int, tuple[list[float], int | None]]:
+    """cell -> (centroid, supercell) from the ``_centroids`` sidecar, in
+    cell order; supercell is None for a flat index."""
+    return {
+        int(r["cell"]): ([float(x) for x in r["centroid"]], r["supercell"])
+        for r in _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
+    }
+
+
+def _write_centroids(spark, path: str, cents: dict[int, tuple[list[float], int | None]]) -> None:
+    """Write :func:`_read_centroids`' mapping back: two columns when
+    every supercell is None (flat), three otherwise."""
+    rows = sorted(cents.items())
+    if all(s is None for _, (_, s) in rows):
+        out, schema = [(c, v) for c, (v, _) in rows], _SIDECAR_FLAT_CENTROIDS_SCHEMA
+    else:
+        out, schema = [(c, v, s) for c, (v, s) in rows], _SIDECAR_CENTROIDS_SCHEMA
+    _write_driver_rows(spark, out, schema, path + "_centroids")
 
 
 def _write_index_schema(spark, path: str, df: DataFrame) -> None:
@@ -1478,20 +1395,25 @@ def _write_index_schema(spark, path: str, df: DataFrame) -> None:
     scan. Fields are normalized to nullable, matching what inference
     reports for parquet. Readers fall back to inference when the
     sidecar is absent (an index written by an older build, or a crash
-    before the schema write — see the build sites: the stale sidecar
-    is deleted BEFORE the data overwrite, so no crash window can pair
-    new data with an old schema)."""
+    before the schema write — see :func:`_build_index`: the stale
+    sidecar is deleted BEFORE the data overwrite, so no crash window
+    can pair new data with an old schema)."""
     fields = StructType([StructField(f.name, f.dataType, True) for f in df.schema.fields])
     _fs_write_text_atomic(spark, path + "_schema", fields.json())
 
 
-def _drop_index_schema(spark, path: str) -> None:
-    """Remove a stale ``_schema`` sidecar before an overwrite build —
-    between the delete and the post-write re-record, readers fall back
-    to inference (correct on any data), never to a mismatched pin."""
-    fs, hpath = _hadoop_fs(spark, path + "_schema")
-    if fs.exists(hpath):
-        _fs_checked(fs.delete(hpath, False), "delete", path + "_schema")
+def _drop_stale_sidecars(spark, path: str) -> None:
+    """Before an overwrite build, remove what an earlier index at
+    ``path`` left beside its data: the ``_schema`` pin (between the
+    delete and the post-write re-record, readers fall back to inference
+    — correct on any data — never to a mismatched pin), the
+    ``_tombstones`` set (it would hide rebuilt rows that reuse a deleted
+    id) and a two-level ``_supers`` sidecar. Hadoop FS calls only: no
+    Spark job."""
+    for suffix in ("_schema", "_tombstones", "_supers"):
+        fs, hpath = _hadoop_fs(spark, path + suffix)
+        if fs.exists(hpath):
+            _fs_checked(fs.delete(hpath, True), "delete", path + suffix)
 
 
 def _read_index(spark, path: str) -> DataFrame:
@@ -1728,15 +1650,14 @@ def recover_ivf_index(spark, path: str) -> dict:
       already-swapped cells left tmp atomically, so re-execution
       converges).
 
-    Every mutating entry point (append / update / compact / rebalance,
-    both layouts) calls this first, so an orchestrator retry of a
-    killed maintenance job self-heals before reading the index. The
-    read-only paths (query/audit) deliberately do NOT mutate: after a
-    crash and before the next maintenance op, a query can miss rows of
-    at most the cells whose rename had not landed — run this (or any
-    maintenance op) once to converge. Layout-agnostic (operates purely
-    on ``cell=*`` directories): :func:`recover_ivf2_index` is the same
-    function.
+    Every mutating entry point (append / update / compact / rebalance)
+    calls this first, so an orchestrator retry of a killed maintenance
+    job self-heals before reading the index. The read-only paths
+    (query/audit) deliberately do NOT mutate: after a crash and before
+    the next maintenance op, a query can miss rows of at most the cells
+    whose rename had not landed — run this (or any maintenance op) once
+    to converge. Layout-agnostic: it operates purely on ``cell=*``
+    directories.
 
     SINGLE-WRITER CONTRACT (load-bearing for the rolled-back branch,
     a code-review r15 finding): ALL mutating operations on one index —
@@ -1757,16 +1678,9 @@ def recover_ivf_index(spark, path: str) -> dict:
         return {"action": "none"}
     _, intent_h = _hadoop_fs(spark, tmp + "/_intent.json")
     if not fs.exists(intent_h):
-        fs.delete(tmp_h, True)
+        _fs_checked(fs.delete(tmp_h, True), "delete", tmp)
         return {"action": "rolled_back"}
     return {"action": "rolled_forward", **_finish_cell_swap(spark, path)}
-
-
-def recover_ivf2_index(spark, path: str) -> dict:
-    """:func:`recover_ivf_index` on the hierarchical layout — the swap
-    protocol never looks inside a cell directory, so the one
-    implementation serves both."""
-    return recover_ivf_index(spark, path)
 
 
 def _replace_cell_partitions(
@@ -1830,9 +1744,10 @@ def append_to_ivf_index(
     skip_existing_ids: bool = True,
     batch_token: str | None = None,
 ) -> None:
-    """Incremental index maintenance: assign a batch of NEW vectors to
-    the EXISTING coarse quantizer (sidecar centroids, never retrained)
-    and append their inverted-list rows. Existing cells' files are
+    """Incremental index maintenance: route a batch of NEW vectors with
+    the EXISTING quantizer (read from the sidecars, never retrained —
+    flat or two-level, whichever built the index) and append their
+    inverted-list rows. Existing cells' files are
     untouched — ``partitionBy("cell")`` + append mode writes only the
     new rows into their cells' directories. This is how a 100 TB IVF
     index absorbs daily arrivals; periodic retraining (when the data
@@ -1917,22 +1832,19 @@ def append_to_ivf_index(
                 "(appending now would be silently hidden by the tombstone "
                 "and removed by the next compaction)"
             )
-    cents = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    centroids = [[float(x) for x in r["centroid"]] for r in cents]
-    # zero-norm batch rows raise inside the assignment expression
+    quant = _Quantizer.load(spark, path)
+    # zero-norm batch rows raise inside the routing expression
     # (_checked_norm) during the append write — no extra guard action
     batch = new_vectors
     if skip_existing_ids:
         existing = _read_index(spark, path).select(F.col(id_col))
         batch = batch.join(existing, on=id_col, how="left_anti")
     # repartition on the partition column before the partitioned write
-    # (the build_ivf_index note): an append otherwise lands
+    # (the _build_index note): an append otherwise lands
     # tasks x touched-cells new files EVERY batch, compounding the
     # index's file count with each ingest window.
-    with_assigned_cell(
-        _spread_narrow_scan(batch.select(F.col(id_col), F.col(vec_col)), id_col),
-        vec_col,
-        centroids,
+    quant.route(
+        _spread_narrow_scan(batch.select(F.col(id_col), F.col(vec_col)), id_col), vec_col
     ).repartition(F.col("cell")).write.mode("append").partitionBy("cell").parquet(path)
     if batch_token is not None:
         _write_driver_rows(
@@ -1999,11 +1911,9 @@ def compact_ivf_index(
 ) -> dict:
     """Physical removal of tombstoned rows — the list-compaction half
     of delete. LAYOUT-AGNOSTIC: the rewrite keeps every non-partition
-    column of the surviving rows verbatim, so the same implementation
-    compacts the flat lists (id, embedding, cell) and the hierarchical
-    ones (neighbor_id, c_vec, cn, cell — pass ``id_col="neighbor_id"``
-    or use :func:`compact_ivf2_index`); only ``id_col`` and the
-    ``cell`` partition column are named. Same partition-pruning
+    column of the surviving rows verbatim (flat and two-level indexes
+    share the list layout); only ``id_col`` and the ``cell`` partition
+    column are named. Same partition-pruning
     contract as :func:`rebalance_ivf_index`: ONLY cells that actually
     hold a tombstoned row are read (a column-pruned (id, cell) scan
     finds them) and ONLY those partitions are rewritten. A cell whose
@@ -2247,117 +2157,6 @@ def audit_ivf_tombstones(
     )
 
 
-def delete_from_ivf2_index(
-    ids: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-) -> None:
-    """:func:`delete_from_ivf_index`'s contract on the HIERARCHICAL
-    layout, completing the two-level lifecycle matrix (build q220 →
-    append q221 → delete/compact/audit here). The hierarchical
-    inverted lists name their id column ``neighbor_id``
-    (:func:`_ivf2_corpus_lists`), so the tombstone sidecar records ids
-    under that name and the flat machinery applies verbatim — same
-    sidecar-only cost (no data file touched), same anti-join dedup,
-    same crash/idempotency semantics."""
-    delete_from_ivf_index(
-        ids.select(F.col(id_col).alias("neighbor_id")), path, id_col="neighbor_id"
-    )
-
-
-def compact_ivf2_index(spark, path: str) -> dict:
-    """:func:`compact_ivf_index` on the hierarchical layout — the
-    compaction is layout-agnostic (it rewrites every surviving column
-    of affected cells verbatim), so this only binds the lists' id
-    column name. Same stats dict, same partition pruning, same
-    sidecar-cleared-last crash convergence."""
-    return compact_ivf_index(spark, path, id_col="neighbor_id")
-
-
-def audit_ivf2_tombstones(spark, path: str) -> DataFrame:
-    """:func:`audit_ivf_tombstones` on the hierarchical layout (id
-    column ``neighbor_id``) — same schema, same integer-exact
-    ``needs_compact`` trigger, same dry-run contract with
-    :func:`compact_ivf2_index`."""
-    return audit_ivf_tombstones(spark, path, id_col="neighbor_id")
-
-
-def _update_in_index(
-    new_vectors,
-    path: str,
-    id_col: str,
-    vec_col: str,
-    batch_token: str | None,
-    lists_id_col: str,
-    append_fn,
-) -> dict:
-    """The one shared delete → micro-compact → append composition
-    behind :func:`update_in_ivf_index` and :func:`update_in_ivf2_index`
-    — parameterized on the inverted lists' id column and the layout's
-    append (the :func:`delete_from_ivf2_index` pattern), so the stats
-    shape, the guard ordering, and the crash argument live exactly
-    once."""
-    spark = new_vectors.sparkSession
-    # heal any crashed maintenance swap before the pre-check reads the
-    # index (a torn cell could otherwise make the wipe probe misjudge)
-    recover_ivf_index(spark, path)
-    if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
-        return {
-            "tombstones": 0,
-            "cells_rewritten": [],
-            "cells_removed": [],
-            "rows_removed": 0,
-            "skipped_token": batch_token,
-        }
-    ids = (
-        new_vectors.select(F.col(id_col).alias(lists_id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # Total-wipe boundary, checked BEFORE any mutation (a code-review
-    # r15 finding: the micro-compaction's own refusal fires only AFTER
-    # step 1 has tombstoned every id — the whole index would sit
-    # hidden behind the sidecar with every retry re-raising, and a
-    # rebuild at the same path would NOT clear it, since build
-    # overwrites only the data and centroid paths, never the sibling
-    # _tombstones). The anti-join probe is cheap in the normal case:
-    # limit(1) short-circuits on the first live id outside the
-    # (broadcast) batch, so only the pathological near-wipe case scans
-    # far.
-    survivor = (
-        _read_index(spark, path)
-        .select(lists_id_col)
-        .join(F.broadcast(ids), on=lists_id_col, how="left_anti")
-        .limit(1)
-        .count()
-    )
-    if survivor == 0:
-        raise ValueError(
-            "update batch covers every row of the index: an in-place "
-            "update of the whole corpus is a rebuild — run "
-            "build_ivf_index/build_ivf2_index instead (and drop the "
-            "_tombstones sidecar if one exists; a rebuild does not "
-            "clear it)"
-        )
-    delete_from_ivf_index(ids, path, id_col=lists_id_col)
-    stats = compact_ivf_index(spark, path, id_col=lists_id_col, only_ids=ids)
-    # skip_existing_ids=False: the guard would be a no-op by
-    # construction — step 2 just physically removed every batch id's
-    # rows, and a crash re-run re-executes steps 1-2 before reaching
-    # this append — so the O(index ids) anti-join scan it costs would
-    # buy nothing (a code-review r15 finding: that scan was the only
-    # term breaking the documented O(cells-of-batch) update cost).
-    append_fn(
-        new_vectors,
-        path,
-        id_col=id_col,
-        vec_col=vec_col,
-        skip_existing_ids=False,
-        batch_token=batch_token,
-    )
-    return stats
-
-
 def update_in_ivf_index(
     new_vectors: DataFrame,
     path: str,
@@ -2384,11 +2183,11 @@ def update_in_ivf_index(
        sidecar; unrelated tombstones stay recorded and their rows in a
        rewritten cell survive still-tombstoned);
     3. append the new vectors (they route fresh under the frozen
-       quantizer — possibly to DIFFERENT cells than the old rows, as
-       an updated embedding should; the re-insert guard passes because
-       step 2 un-tombstoned the ids, and the existing-id guard is
-       skipped because step 2 provably removed the old rows — see
-       :func:`_update_in_index`).
+       quantizer, flat or two-level — possibly to DIFFERENT cells than
+       the old rows, as an updated embedding should; the re-insert
+       guard passes because step 2 un-tombstoned the ids, and the
+       existing-id guard is skipped because step 2 provably removed the
+       old rows).
 
     Upsert semantics: an id the index never held tombstones nothing,
     micro-compacts nothing, and appends normally. Updating EVERY row
@@ -2414,31 +2213,56 @@ def update_in_ivf_index(
 
     Returns step 2's stats dict (the measured cost of the update's
     rewrite)."""
-    return _update_in_index(
-        new_vectors, path, id_col, vec_col, batch_token,
-        lists_id_col=id_col, append_fn=append_to_ivf_index,
+    spark = new_vectors.sparkSession
+    # heal any crashed maintenance swap before the pre-check reads the
+    # index (a torn cell could otherwise make the wipe probe misjudge)
+    recover_ivf_index(spark, path)
+    if batch_token is not None and _count_batch_token(spark, path + "_batches", batch_token):
+        return {
+            "tombstones": 0,
+            "cells_rewritten": [],
+            "cells_removed": [],
+            "rows_removed": 0,
+            "skipped_token": batch_token,
+        }
+    ids = new_vectors.select(F.col(id_col)).distinct().localCheckpoint(eager=True)
+    # Total-wipe boundary, checked BEFORE any mutation (a code-review
+    # r15 finding: the micro-compaction's own refusal fires only AFTER
+    # step 1 has tombstoned every id — the whole index would sit
+    # hidden behind the sidecar with every retry re-raising). The
+    # anti-join probe is cheap in the normal case: limit(1)
+    # short-circuits on the first live id outside the (broadcast)
+    # batch, so only the pathological near-wipe case scans far.
+    survivor = (
+        _read_index(spark, path)
+        .select(id_col)
+        .join(F.broadcast(ids), on=id_col, how="left_anti")
+        .limit(1)
+        .count()
     )
-
-
-def update_in_ivf2_index(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_token: str | None = None,
-) -> dict:
-    """:func:`update_in_ivf_index` on the hierarchical layout — the
-    same delete → micro-compact → append composition
-    (:func:`_update_in_index`, one implementation) with the lists'
-    ``neighbor_id`` column bound and the append routing
-    supercell → best member cell at O(sqrt n_cells) per row. Same
-    upsert semantics, same pre-mutation total-wipe boundary, same
-    crash convergence, same O(cells-of-batch) cost independent of
-    unrelated tombstone debt."""
-    return _update_in_index(
-        new_vectors, path, id_col, vec_col, batch_token,
-        lists_id_col="neighbor_id", append_fn=append_to_ivf2_index,
+    if survivor == 0:
+        raise ValueError(
+            "update batch covers every row of the index: an in-place "
+            "update of the whole corpus is a rebuild — run "
+            "build_ivf_index/build_ivf2_index instead"
+        )
+    delete_from_ivf_index(ids, path, id_col=id_col)
+    stats = compact_ivf_index(spark, path, id_col=id_col, only_ids=ids)
+    # skip_existing_ids=False: the guard would be a no-op by
+    # construction — step 2 just physically removed every batch id's
+    # rows, and a crash re-run re-executes steps 1-2 before reaching
+    # this append — so the O(index ids) anti-join scan it costs would
+    # buy nothing (a code-review r15 finding: that scan was the only
+    # term breaking the documented O(cells-of-batch) update cost).
+    append_to_ivf_index(
+        new_vectors,
+        path,
+        id_col=id_col,
+        vec_col=vec_col,
+        skip_existing_ids=False,
+        batch_token=batch_token,
     )
+    return stats
 
 
 def query_ivf_index(
@@ -2448,36 +2272,29 @@ def query_ivf_index(
     vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 3,
+    n_super_probe: int = 2,
 ) -> DataFrame:
-    """Top-k against a persisted IVF index. The probed cell set (≤
-    n_cells ids, one tiny driver round-trip) becomes a static partition
-    filter on the inverted-list scan — the plan reads ONLY those cells'
-    files (``PartitionFilters`` on the scan), which is what makes
-    repeated query batches ~``n_probe / n_cells`` of a full scan.
+    """Top-k against a persisted IVF index. The quantizer is read from
+    the index's sidecars: a flat index ranks its ``n_probe`` best cells
+    per query; a two-level one ranks the member cells of its
+    ``n_super_probe`` best supercells and keeps ``n_probe`` (flat
+    ignores ``n_super_probe``). The probed cell set (≤ n_cells ids, one
+    tiny driver round-trip) becomes a static partition filter on the
+    inverted-list scan — the plan reads ONLY those cells' files
+    (``PartitionFilters`` on the scan), which is what makes repeated
+    query batches ~``n_probe / n_cells`` of a full scan. Values equal
+    the in-plan :func:`cosine_topk_ivf` / :func:`cosine_topk_ivf2`:
+    the probe and score devices are shared, and the row norm is
+    recomputed from the stored vector by the same expression.
     Tombstoned ids (:func:`delete_from_ivf_index`) are anti-joined out
     of the candidate side before scoring, so deletes are visible
     without any file rewrite; ranks are assigned AFTER the exclusion
     (a deleted neighbor frees its rank for the next-best row)."""
     spark = queries.sparkSession
-    cents = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    centroids = [[float(x) for x in r["centroid"]] for r in cents]
-
-    q = (
-        with_probe_cells(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).alias("q_vec"),
-                _checked_norm(norm_expr(F.col(vec_col))).alias("qn"),
-            ),
-            "q_vec",
-            centroids,
-            n_probe,
-        )
-        .select("query_id", "q_vec", "qn", F.explode("_probes").alias("probe"))
-        .select("query_id", "q_vec", "qn", F.col("probe.c").alias("cell"))
-    )
+    quant = _Quantizer.load(spark, path)
     # q is consumed twice (probed-cell collect, then the broadcast join);
-    # checkpoint so the n_cells-per-row centroid scoring runs once
+    # checkpoint so the per-row centroid scoring runs once
+    q = quant.probe(_probe_side(queries, id_col, vec_col), n_probe, n_super_probe)
     q = q.localCheckpoint(eager=True)
 
     # dedup driver-side: q is ≤ queries x n_probe rows (already
@@ -2498,22 +2315,7 @@ def query_ivf_index(
         norm_expr(F.col(vec_col)).alias("cn"),
         "cell",
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, on="cell", how="inner")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        # norms ride the row projections (the cosine_topk note);
-        # scores bit-identical to the per-pair cosine_expr form
-        .select(
-            "query_id",
-            "neighbor_id",
-            floor_round6(
-                dot_expr(F.col("q_vec"), F.col("c_vec")) / (F.col("qn") * F.col("cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return _score_topk(q, c, k)
 
 
 def split_hot_cells(members: DataFrame, materialize=None) -> DataFrame:
@@ -2623,7 +2425,11 @@ def rebalance_ivf_index(
     such a cell's trained centroid. Both halves' centroids are
     recomputed as the order-pinned per-dimension member mean
     (``_lloyd_dim_means`` — the Lloyd-step fold), so probing quality
-    reflects the new boundaries; the sidecar is rewritten to match.
+    reflects the new boundaries; the sidecar is rewritten to match. On
+    a two-level index each fresh 'b' cell INHERITS its parent's
+    supercell: both halves' vectors were routed to the parent's
+    supercell, and keeping them there preserves the containment the
+    two-stage probe ranking assumes (``_supers`` is untouched).
 
     Scale contract (what makes this cheap at 100 TB):
 
@@ -2672,9 +2478,7 @@ def rebalance_ivf_index(
     if not hot:
         stats.update(
             n_cells_after=ncells,
-            sidecar_cells_after=len(
-                _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-            ),
+            sidecar_cells_after=len(_read_centroids(spark, path)),
             max_after=stats["max_before"],
             new_cells=[],
         )
@@ -2707,8 +2511,7 @@ def rebalance_ivf_index(
     # trained-but-empty cell can hold the highest id — allocating from
     # data partitions alone would collide with it and silently
     # repurpose its trained centroid (the r12 ADVICE finding)
-    old = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS_SCHEMA, "cell")
-    sidecar = {int(r["cell"]): [float(x) for x in r["centroid"]] for r in old}
+    sidecar = _read_centroids(spark, path)
     b_cells = sorted(
         int(r["cell"])
         for r in halves.where(F.col("sub") == "b").select("cell").distinct().collect()
@@ -2730,14 +2533,13 @@ def rebalance_ivf_index(
     relabeled = halves.select(cell_out, "id", "v").localCheckpoint(eager=True)
 
     # order-pinned per-dimension means for BOTH halves (the Lloyd fold)
+    # ('b' halves take their parent's supercell, None when flat)
     means = _lloyd_dim_means(relabeled.select("id", "cell", "v"))
-    split_cents = {
-        int(r["cell"]): [
-            math.floor(float(dd["m"]) * 1000000 + 0.5) / 1000000.0 for dd in r["dims"]
-        ]
-        for r in means
-    }
-    sidecar.update(split_cents)
+    parent = {new_id[c]: c for c in b_cells}
+    for r in means:
+        cell = int(r["cell"])
+        cent = [math.floor(float(dd["m"]) * 1000000 + 0.5) / 1000000.0 for dd in r["dims"]]
+        sidecar[cell] = (cent, sidecar[parent.get(cell, cell)][1])
 
     # Sidecar FIRST, data second. A crash between the two then leaves
     # centroids for cells that hold no data yet — queries probe an
@@ -2746,9 +2548,7 @@ def rebalance_ivf_index(
     # would strand the 'b' halves unreachable (rows in partitions no
     # centroid ever probes) with no self-healing re-run: occupancy
     # would read the new layout while the sidecar lags it.
-    _write_driver_rows(
-        spark, sorted(sidecar.items()), _SIDECAR_CENTROIDS_SCHEMA, path + "_centroids"
-    )
+    _write_centroids(spark, path, sidecar)
     # hot + new partitions replace through the atomic cell swap
     # (stage under .maint-tmp, intent-commit, per-cell delete+rename) —
     # the dynamic-overwrite job-commit tear this function's docstring
@@ -2770,152 +2570,6 @@ def rebalance_ivf_index(
     # + rewritten (hot 'a' halves keep their ids, so this equals
     # len(counts) + len(b_cells) — asserted cheaply here); the sidecar
     # count additionally carries trained-but-empty cells
-    data_cells_after = {c for c in counts if c not in hot} | set(after)
-    assert len(data_cells_after) == ncells + len(b_cells)
-    stats.update(
-        n_cells_after=len(data_cells_after),
-        sidecar_cells_after=len(sidecar),
-        max_after=max(
-            [n for c, n in counts.items() if c not in hot] + list(after.values()),
-            default=0,
-        ),
-        new_cells=sorted(new_id.values()),
-    )
-    return stats
-
-
-def rebalance_ivf2_index(spark, path: str) -> dict:
-    """:func:`rebalance_ivf_index` on the persisted HIERARCHICAL
-    layout — the last cell of the flat/hierarchical lifecycle matrix
-    (build → persist → append → delete/compact/audit → REBALANCE).
-    Same trigger contract (the occupancy audit's skew alarm decides
-    WHEN; this splits EVERY over-mean cell), same deterministic 2-seed
-    split (:func:`split_hot_cells` — the one shared implementation, so
-    the q223-oracle-checked arithmetic governs this layout too), same
-    partition pruning (cold cells' files never touched, only hot + new
-    partitions rewrite through the atomic cell swap), same
-    sidecar-first crash convergence.
-
-    Two layout-specific differences:
-
-    - the inverted lists carry a PRECOMPUTED norm (``cn``) that
-      :func:`query_ivf2_index` scores with, so the rewrite joins the
-      split assignment back to the checkpointed member table to carry
-      the original ``cn`` through bit-unchanged (recomputing it would
-      be value-identical today but couples the repair to the build's
-      expression — carrying the stored value cannot drift);
-    - each fresh 'b' cell INHERITS its parent's supercell in the
-      ``_centroids`` sidecar (the split never moves members across the
-      level-1 boundary — both halves' vectors were routed to the
-      parent's supercell, and keeping them there preserves the
-      containment the two-stage probe ranking assumes). The
-      ``_supers`` sidecar is untouched; future appends/queries pick up
-      the new cells automatically because the member table derives
-      from the rewritten ``_centroids``."""
-    recover_ivf_index(spark, path)
-    idx = _read_index(spark, path)
-    occ = idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    counts = {int(r["cell"]): int(r["n"]) for r in occ}
-    total, ncells = sum(counts.values()), len(counts)
-    hot = sorted(c for c, n in counts.items() if n * ncells > total)
-    stats = {
-        "hot_cells": hot,
-        "n_cells_before": ncells,
-        "max_before": max(counts.values(), default=0),
-    }
-    old = _sidecar_rows(spark, path + "_centroids", _SIDECAR_CENTROIDS2_SCHEMA, "cell")
-    sidecar = {
-        int(r["cell"]): (
-            [float(x) for x in r["centroid"]],
-            int(r["supercell"]),
-        )
-        for r in old
-    }
-    if not hot:
-        stats.update(
-            n_cells_after=ncells,
-            sidecar_cells_after=len(sidecar),
-            max_after=stats["max_before"],
-            new_cells=[],
-        )
-        return stats
-
-    members = (
-        idx.where(F.col("cell").isin(hot))
-        .select(
-            F.col("cell").cast("int").alias("cell"),
-            F.col("neighbor_id").alias("id"),
-            F.col("c_vec").alias("v"),
-            F.col("cn").alias("nrm"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    halves = split_hot_cells(
-        members, materialize=lambda df: df.localCheckpoint(eager=True)
-    )
-    b_cells = sorted(
-        int(r["cell"])
-        for r in halves.where(F.col("sub") == "b").select("cell").distinct().collect()
-    )
-    base = max(set(counts) | set(sidecar)) + 1
-    new_id = {c: base + i for i, c in enumerate(b_cells)}
-    if b_cells:
-        mapping = F.create_map(*[F.lit(x) for c in b_cells for x in (c, new_id[c])])
-        cell_out = (
-            F.when(F.col("sub") == "b", mapping[F.col("cell")])
-            .otherwise(F.col("cell"))
-            .alias("cell")
-        )
-    else:
-        cell_out = F.col("cell").alias("cell")
-    # carry the STORED cn through the relabel (see docstring) — the
-    # join key (cell, id) is unique within the hot member set
-    relabeled = (
-        halves.select(F.col("cell").alias("old_cell"), cell_out, "id", "v")
-        .join(
-            members.select(
-                F.col("cell").alias("old_cell"), "id", F.col("nrm").alias("cn")
-            ),
-            ["old_cell", "id"],
-        )
-        .select("cell", "id", "v", "cn")
-        .localCheckpoint(eager=True)
-    )
-
-    means = _lloyd_dim_means(relabeled.select("id", "cell", "v"))
-    parent_super = {new_id[c]: sidecar[c][1] for c in b_cells}
-    for r in means:
-        cell = int(r["cell"])
-        cent = [
-            math.floor(float(dd["m"]) * 1000000 + 0.5) / 1000000.0 for dd in r["dims"]
-        ]
-        sup = parent_super.get(cell, sidecar.get(cell, (None, None))[1])
-        sidecar[cell] = (cent, sup)
-
-    # sidecar FIRST, data second (the flat rebalance crash argument)
-    _write_driver_rows(
-        spark,
-        [(c, cent, sup) for c, (cent, sup) in sorted(sidecar.items())],
-        _SIDECAR_CENTROIDS2_SCHEMA,
-        path + "_centroids",
-    )
-    # same atomic cell swap as the flat rebalance (see its note)
-    _replace_cell_partitions(
-        spark,
-        path,
-        relabeled.select(
-            F.col("id").alias("neighbor_id"),
-            F.col("v").alias("c_vec"),
-            "cn",
-            "cell",
-        ),
-        removed_cells=[],
-    )
-
-    after = {
-        int(r["cell"]): int(r["n"])
-        for r in relabeled.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
     data_cells_after = {c for c in counts if c not in hot} | set(after)
     assert len(data_cells_after) == ncells + len(b_cells)
     stats.update(

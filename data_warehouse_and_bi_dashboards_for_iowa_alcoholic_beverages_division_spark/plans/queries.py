@@ -12334,16 +12334,18 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
     "contract lifted to the two-level scale path (q212's routing): "
     "build trains the two-level quantizer (sampled level-2 Lloyd, "
     "driver-local level-1), routes every vector supercell -> best "
-    "member cell map-only, and writes the inverted lists "
-    "partitionBy(cell) with centroid/supercell sidecars; query "
-    "rebuilds the driver-resident quantizer from the sidecars, probes "
+    "member cell map-only, and writes the same (id, vec, cell) "
+    "inverted lists as the flat build, partitionBy(cell), with "
+    "centroid/supercell sidecars; query_ivf_index reads the two-level "
+    "quantizer back from the sidecars, probes "
     "2 supers -> 3 member cells, and reads ONLY the probed cells' "
     "files (static PartitionFilters on the list scan). At 10^9 "
     "vectors this is the serving layout: one corpus pass at build, "
     "O(sqrt n_cells) routing, query I/O proportional to the probed "
     "fraction. The oracle is q212's verbatim (the parquet round trip "
-    "preserves every vector and precomputed norm bit-for-bit, and the "
-    "probe/score devices are shared), so build -> persist -> query is "
+    "preserves every vector bit-for-bit, the query recomputes each "
+    "row norm with the build's expression, and the probe/score "
+    "devices are shared), so build -> persist -> query is "
     "value-checked end-to-end across the file boundary",
 )
 def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12355,7 +12357,7 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    return similarity.query_ivf2_index(
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12370,7 +12372,8 @@ def q220(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(capacity still derived from the full corpus the index must "
     "serve), the existing 90% slice is inverted-listed at build, the "
     "arriving batch (vec_id%10=0) routes supercell -> best member "
-    "cell under the FROZEN sidecar quantizer at O(sqrt n_cells) per "
+    "cell under the FROZEN sidecar quantizer (append_to_ivf_index "
+    "reads it from the index's sidecars) at O(sqrt n_cells) per "
     "row - the flat append's O(n_cells) assignment is exactly the "
     "term hierarchical routing exists to remove, so maintenance cost "
     "stays sub-linear in index capacity as the corpus grows - and "
@@ -12389,8 +12392,8 @@ def q221(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         existing, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.append_to_ivf2_index(arriving, path)
-    return similarity.query_ivf2_index(
+    similarity.append_to_ivf_index(arriving, path)
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12419,14 +12422,14 @@ def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
     "flat/hierarchical x build/append/delete/compact matrix: the "
     "two-level index is built and persisted (q220's path), the "
     "tombstone set (vec_id % 7 = 3) recorded via "
-    "delete_from_ivf2_index (sidecar-only - at 10^9 vectors a delete "
-    "must not rewrite an inverted-list file), and query_ivf2_index "
+    "delete_from_ivf_index (sidecar-only - at 10^9 vectors a delete "
+    "must not rewrite an inverted-list file), and query_ivf_index "
     "anti-joins the sidecar out of the candidate side BEFORE scoring, "
     "so deletes are visible immediately and ranks assigned after the "
     "exclusion free a deleted neighbor's rank. Physical removal is "
-    "compact_ivf2_index (the layout-agnostic compaction: rewrites "
+    "compact_ivf_index (the layout-agnostic compaction: rewrites "
     "every surviving column of only the tombstone-holding cells), "
-    "with the WHEN data-driven by audit_ivf2_tombstones - both "
+    "with the WHEN data-driven by audit_ivf_tombstones - both "
     "pytest-pinned. The oracle is q212's verbatim two-level unroll "
     "with the tombstone exclusion grafted before the terminal "
     "ranking, so build -> persist -> delete -> query is value-checked "
@@ -12435,19 +12438,18 @@ def _q226_oracle(tombstone_pred: str = "neighbor_id % 7 = 3") -> str:
 def q226(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     nc = similarity.derived_n_cells(_scalar_count(emb))
-    # deterministic per-SF path (the q156 leak note): build OVERWRITES,
-    # but does NOT clear a leftover tombstone sidecar — a dedicated
-    # path (not q220's) keeps the two queries independent, and re-runs
-    # stay convergent because the delete's anti-join dedup makes the
-    # same tombstone set a no-op on the second pass
+    # deterministic per-SF path (the q156 leak note): build OVERWRITES
+    # the data and drops a leftover tombstone sidecar, so every call
+    # deletes from a freshly written index; a dedicated path (not
+    # q220's) keeps the two queries independent
     path = _scratch_index_path("ivf2_del", sf_dir)
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.delete_from_ivf2_index(
+    similarity.delete_from_ivf_index(
         emb.where("vec_id % 7 = 3").select("vec_id"), path
     )
-    return similarity.query_ivf2_index(
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 
@@ -12477,10 +12479,11 @@ def _q227_oracle() -> str:
     _q227_oracle(),
     "Hierarchical-IVF occupancy audit - q200's retrain/rebalance "
     "trigger on the two-level layout, the WHEN for "
-    "rebalance_ivf2_index (which completed the lifecycle matrix in "
-    "r14): per-member-cell vector counts and shares under the "
-    "two-level routing (super -> best member cell), the max/mean skew "
-    "factor, and the needs_rebalance flag (skew > 2x - the same "
+    "rebalance_ivf_index on a two-level index (which completed the "
+    "lifecycle matrix in r14): per-member-cell vector counts and "
+    "shares under the two-level routing (super -> best member "
+    "cell), the max/mean skew factor, and the needs_rebalance flag "
+    "(skew > 2x - the same "
     "deliberately-lax alarm contract as the flat pair, property-"
     "pinned: the audit firing implies the repair finds over-mean "
     "cells). At scale this runs after every append window on the "
@@ -12493,12 +12496,11 @@ def _q227_oracle() -> str:
 def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     nc = similarity.derived_n_cells(_scalar_count(emb))
-    l2, l1, cell2super = similarity.ivf2_train(
-        emb, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
+    quant = similarity._Quantizer(
+        *similarity.ivf2_train(emb, n_cells=nc, iters=2, train_where="vec_id % 16 = 0")
     )
-    members = similarity._member_table_df(spark, l2, cell2super)
     counts = (
-        similarity._ivf2_corpus_lists(emb, members, l1, "vec_id", "embedding")
+        similarity._in_plan_lists(emb, quant, "vec_id", "embedding")
         .groupBy("cell")
         .agg(F.count("*").alias("n"))
     )
@@ -12573,15 +12575,15 @@ def q228(spark: SparkSession, sf_dir: str) -> DataFrame:
     "In-place vector UPDATE on the persisted HIERARCHICAL index - "
     "q228's lifecycle step on the two-level layout, completing the "
     "flat/hierarchical x build/append/delete/compact/update matrix: "
-    "the same delete -> only_ids micro-compact -> append composition "
-    "(one implementation, the lists' neighbor_id column bound) with "
+    "the same update_in_ivf_index (delete -> only_ids micro-compact "
+    "-> append, one implementation for both layouts) with "
     "the re-append routing supercell -> best member cell at "
     "O(sqrt n_cells) per row. The update set (ids = 5 mod 16, vectors "
     "reversed) is disjoint from the 1/16 train sample, so both "
     "quantizer levels stay frozen; old rows leave exactly the cells "
-    "that held them via the atomic cell swap, stored (c_vec, cn) of "
-    "surviving rows carried bit-unchanged, and the appended rows "
-    "recompute their norm exactly as build does. Oracle = q212's "
+    "that held them via the atomic cell swap, surviving rows carried "
+    "bit-unchanged, and the appended rows route exactly as build "
+    "does. Oracle = q212's "
     "verbatim two-level unroll with the v corpus swapped for the "
     "updated one (train CTEs still read the raw rows - unchanged by "
     "construction), so build -> update -> query is value-checked "
@@ -12594,8 +12596,8 @@ def q229(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity.build_ivf2_index(
         emb, path, n_cells=nc, iters=2, train_where="vec_id % 16 = 0"
     )
-    similarity.update_in_ivf2_index(_updated_vectors(emb), path)
-    return similarity.query_ivf2_index(
+    similarity.update_in_ivf_index(_updated_vectors(emb), path)
+    return similarity.query_ivf_index(
         emb.where("vec_id < 5"), path, k=10, n_probe=3, n_super_probe=2
     )
 

@@ -81,12 +81,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
-
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """Parquet sink (S2). At 100 TB the fact table is written
-    ``partitionBy`` date so incremental loads and time-bounded queries
-    prune partitions instead of scanning history."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)

@@ -16,12 +16,17 @@ import os
 import pathlib
 
 import pyspark.sql.functions as F
+import pytest
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+    append_to_ivf_index,
+    build_ivf2_index,
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
     query_ivf_index,
+    rebalance_ivf_index,
+    update_in_ivf_index,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
     load_table,
@@ -195,16 +200,15 @@ def test_compact_noop_without_tombstones(spark, tmp_path):
     assert spark.read.parquet(path + "_tombstones").count() == 0
 
 
-def test_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
+@pytest.mark.parametrize("build", [build_ivf_index, build_ivf2_index], ids=["flat", "ivf2"])
+def test_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path, build):
     """Update-as-delete-then-reinsert needs a compaction between the
     steps (code-review r13): accepting the append would lose the new
     vector silently under either idempotency guard, so it must raise
     with the compact instruction instead."""
-    import pytest
-
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx")
-    build_ivf_index(emb, path, n_cells=8, iters=2)
+    build(emb, path, n_cells=8, iters=2)
     # schema must match the index's physical column types (the corpus
     # is array<float>; a double-array row would poison the partition)
     new_vec = spark.createDataFrame(
@@ -212,21 +216,32 @@ def test_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
     )
     delete_from_ivf_index(_id_df(spark, [7]), path)
     with pytest.raises(ValueError, match="tombstoned"):
-        from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-            append_to_ivf_index,
-        )
-
         append_to_ivf_index(new_vec, path)
     # after compaction the re-insert is well-defined and lands
     compact_ivf_index(spark, path)
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-        append_to_ivf_index,
-    )
-
     append_to_ivf_index(new_vec, path)
     got = spark.read.parquet(path).where("vec_id = 7").collect()
     assert len(got) == 1
     assert [float(x) for x in got[0]["embedding"]] == [0.5] * 64
+
+
+@pytest.mark.parametrize("build", [build_ivf_index, build_ivf2_index], ids=["flat", "ivf2"])
+def test_rebuild_drops_stale_tombstones(spark, tmp_path, build):
+    """A build at the path of an earlier index replaces it whole: its
+    tombstone set must not survive to hide rebuilt rows that reuse a
+    deleted id."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx")
+    build(emb, path, n_cells=8, iters=2)
+    delete_from_ivf_index(_id_df(spark, [7]), path)
+    build(emb, path, n_cells=8, iters=2)
+    assert not os.path.exists(path + "_tombstones")
+    # id 7's own vector under another query id (a query never returns
+    # its own id) must find id 7 again, at cosine 1
+    probe = emb.where("vec_id = 7").select(F.lit(-1).cast("bigint").alias("vec_id"), "embedding")
+    top = query_ivf_index(probe, path, k=1, n_probe=3).collect()
+    assert [int(r["neighbor_id"]) for r in top] == [7]
+    assert top[0]["score"] > 0.99999
 
 
 def test_compact_clears_sidecar_with_its_own_schema(spark, tmp_path):
@@ -400,24 +415,15 @@ def test_tombstone_audit_zero_debt_paths(spark, tmp_path):
 
 # ---------------------------------------------------------------------
 # Hierarchical (IVF2) lifecycle — the same delete/compact/audit
-# contracts on the two-level layout (r14): sidecar-only delete visible
-# immediately, layout-agnostic compaction preserving the full
-# (neighbor_id, c_vec, cn, cell) row, cold cells byte-identical, the
-# audit as dry-run, and the tombstoned-id re-append rejection.
+# contracts on an index built with the two-level quantizer (r14):
+# sidecar-only delete visible immediately, layout-agnostic compaction
+# preserving the full (vec_id, embedding, cell) row, cold cells
+# byte-identical, and the audit as dry-run.
 # ---------------------------------------------------------------------
-
-from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
-    append_to_ivf2_index,
-    audit_ivf2_tombstones,
-    build_ivf2_index,
-    compact_ivf2_index,
-    delete_from_ivf2_index,
-    query_ivf2_index,
-)
 
 
 def _neighbors2(spark, emb, path, k=5):
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=k, n_probe=3, n_super_probe=2)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=k, n_probe=3, n_super_probe=2)
     return {
         (int(r["query_id"]), int(r["rank"])): int(r["neighbor_id"])
         for r in res.collect()
@@ -431,35 +437,35 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     before = _neighbors2(spark, emb, path)
     files_before = _all_files(path)
     ids_before = {
-        int(r["neighbor_id"])
-        for r in spark.read.parquet(path).select("neighbor_id").collect()
+        int(r["vec_id"])
+        for r in spark.read.parquet(path).select("vec_id").collect()
     }
     schema_before = spark.read.parquet(path).drop("cell").schema
 
     victim = before[(0, 1)]
-    delete_from_ivf2_index(_id_df(spark, [victim]), path)
+    delete_from_ivf_index(_id_df(spark, [victim]), path)
     # sidecar-only: no data file moved, exclusion visible immediately
     assert _all_files(path) == files_before
     after = _neighbors2(spark, emb, path)
     assert victim not in set(after.values())
     assert len(after) == len(before)
 
-    # audit is the dry-run of the compaction (id col = neighbor_id)
+    # audit is the dry-run of the compaction
     audit = {
         int(r["cell"]): r.asDict()
-        for r in audit_ivf2_tombstones(spark, path).collect()
+        for r in audit_ivf_tombstones(spark, path).collect()
     }
     affected = sorted(c for c, a in audit.items() if a["n_tombstoned"] > 0)
     assert sum(a["n_tombstoned"] for a in audit.values()) == 1
 
-    stats = compact_ivf2_index(spark, path)
+    stats = compact_ivf_index(spark, path)
     assert stats["rows_removed"] == 1
     assert sorted(stats["cells_rewritten"] + stats["cells_removed"]) == affected
     # physical removal; every surviving column kept (layout-agnostic
-    # rewrite must not drop c_vec/cn or reorder types)
+    # rewrite must not drop the vector or reorder types)
     assert {
-        int(r["neighbor_id"])
-        for r in spark.read.parquet(path).select("neighbor_id").collect()
+        int(r["vec_id"])
+        for r in spark.read.parquet(path).select("vec_id").collect()
     } == ids_before - {victim}
     assert spark.read.parquet(path).drop("cell").schema == schema_before
     # post-compaction results identical to the tombstone-final view
@@ -469,7 +475,7 @@ def test_ivf2_delete_compact_audit_lifecycle(spark, tmp_path):
     assert all(
         a["n_tombstoned"] == 0 and not a["needs_compact"]
         for a in (
-            r.asDict() for r in audit_ivf2_tombstones(spark, path).collect()
+            r.asDict() for r in audit_ivf_tombstones(spark, path).collect()
         )
     )
 
@@ -485,8 +491,8 @@ def test_ivf2_tombstone_query_plan_keeps_pruning_and_broadcasts(spark, tmp_path)
     emb = load_table(spark, SF_DIR, "embeddings")
     path = str(tmp_path / "idx2")
     build_ivf2_index(emb, path, n_cells=8, iters=2)
-    delete_from_ivf2_index(_id_df(spark, [7, 11]), path)
-    out = query_ivf2_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
+    delete_from_ivf_index(_id_df(spark, [7, 11]), path)
+    out = query_ivf_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         out.explain("formatted")
@@ -498,24 +504,6 @@ def test_ivf2_tombstone_query_plan_keeps_pruning_and_broadcasts(spark, tmp_path)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_ivf2_reinsert_of_tombstoned_id_raises_until_compacted(spark, tmp_path):
-    import pytest
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "idx2")
-    build_ivf2_index(emb, path, n_cells=8, iters=2)
-    new_vec = spark.createDataFrame(
-        [(7, [0.5] * 64)], "vec_id BIGINT, embedding ARRAY<FLOAT>"
-    )
-    delete_from_ivf2_index(_id_df(spark, [7]), path)
-    with pytest.raises(ValueError, match="tombstoned"):
-        append_to_ivf2_index(new_vec, path)
-    compact_ivf2_index(spark, path)
-    append_to_ivf2_index(new_vec, path)
-    got = spark.read.parquet(path).where("neighbor_id = 7").collect()
-    assert len(got) == 1
 
 
 def test_tombstone_audit_trigger_fires_over_ten_percent(spark, tmp_path):
@@ -537,3 +525,96 @@ def test_tombstone_audit_trigger_fires_over_ten_percent(spark, tmp_path):
     # the quiet case above would ALSO have found work — by design)
     stats = compact_ivf_index(spark, path)
     assert stats["rows_removed"] == len(loud)
+
+# ---------------------------------------------------------------------
+# One lifecycle for both quantizers: jobs per op are pinned for the
+# whole cycle (build → append → query → update → delete → compact →
+# rebalance → query), counted per job group through the StatusTracker
+# — the flat counts exactly (the benchmark's dedup_ann cycle runs the
+# flat lifecycle), the two-level counts as upper bounds; and a build at
+# the path of an index of the other layout replaces it whole.
+# ---------------------------------------------------------------------
+
+_BUILD = {
+    "flat": lambda df, path: build_ivf_index(
+        df, path, n_cells=16, iters=2, train_where="vec_id % 4 = 0"
+    ),
+    "ivf2": lambda df, path: build_ivf2_index(
+        df, path, n_cells=16, iters=2, train_where="vec_id % 4 = 0"
+    ),
+}
+
+# Jobs per op at sf0.001 under the test session (local[8]), measured
+# on the two-layout lifecycle this one replaced. Flat must not move;
+# two-level may only get cheaper.
+_FLAT_JOBS = {
+    "build": 5, "append": 5, "query": 6, "update": 32,
+    "delete": 4, "compact": 15, "rebalance": 25, "query_after": 9,
+}
+_IVF2_MAX_JOBS = {
+    "build": 7, "append": 7, "query": 9, "update": 34,
+    "delete": 4, "compact": 15, "rebalance": 26, "query_after": 11,
+}
+
+
+@pytest.mark.parametrize("layout", ["flat", "ivf2"])
+def test_lifecycle_jobs_per_op(spark, tmp_path, layout):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.where("vec_id < 5")
+    path = str(tmp_path / "idx")
+
+    def query():
+        return query_ivf_index(queries, path, k=10, n_probe=3, n_super_probe=2).collect()
+
+    ops = {
+        "build": lambda: _BUILD[layout](emb.where("vec_id % 10 != 0"), path),
+        "append": lambda: append_to_ivf_index(emb.where("vec_id % 10 = 0"), path),
+        "query": query,
+        "update": lambda: update_in_ivf_index(
+            emb.where("vec_id % 16 = 5").select("vec_id", F.reverse("embedding").alias("embedding")),
+            path,
+        ),
+        "delete": lambda: delete_from_ivf_index(emb.where("vec_id % 7 = 3").select("vec_id"), path),
+        "compact": lambda: compact_ivf_index(spark, path),
+        "rebalance": lambda: rebalance_ivf_index(spark, path),
+        "query_after": query,
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, op in ops.items():
+            group = f"ivf-lifecycle-{layout}-{name}"
+            sc.setJobGroup(group, group)
+            op()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    if layout == "flat":
+        assert jobs == _FLAT_JOBS
+    else:
+        assert {n: jobs[n] for n in jobs if jobs[n] > _IVF2_MAX_JOBS[n]} == {}
+
+
+@pytest.mark.parametrize("first,second", [("ivf2", "flat"), ("flat", "ivf2")])
+def test_rebuild_in_the_other_layout_equals_fresh_index(spark, tmp_path, first, second):
+    emb = load_table(spark, SF_DIR, "embeddings")
+    existing = emb.where("vec_id % 10 != 0")
+    queries = emb.where("vec_id < 5")
+
+    def build_append_query(path):
+        _BUILD[second](existing, path)
+        append_to_ivf_index(emb.where("vec_id % 10 = 0"), path)
+        rows = query_ivf_index(queries, path, k=10, n_probe=3, n_super_probe=2).collect()
+        sidecars = sorted(
+            s for s in ("_schema", "_centroids", "_supers", "_tombstones")
+            if os.path.exists(path + s)
+        )
+        return sorted(tuple(r) for r in rows), sidecars
+
+    reused = str(tmp_path / "reused")
+    _BUILD[first](existing, reused)
+    delete_from_ivf_index(emb.where("vec_id < 20").select("vec_id"), reused)
+    got = build_append_query(reused)
+    assert got == build_append_query(str(tmp_path / "fresh"))
+    assert ("_supers" in got[1]) == (second == "ivf2")

@@ -317,10 +317,10 @@ def test_ivf2_append_equals_fresh_full_build(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
-        append_to_ivf2_index,
+        append_to_ivf_index,
         build_ivf2_index,
         cosine_topk_ivf2,
-        query_ivf2_index,
+        query_ivf_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -330,12 +330,12 @@ def test_ivf2_append_equals_fresh_full_build(spark, tmp_path):
         train_where="vec_id % 16 = 0",
     )
     arriving = emb.where("vec_id % 10 = 0")
-    append_to_ivf2_index(arriving, path)
+    append_to_ivf_index(arriving, path)
     n_after = spark.read.parquet(path).count()
-    append_to_ivf2_index(arriving, path)  # retry: anti-join guard
+    append_to_ivf_index(arriving, path)  # retry: anti-join guard
     assert spark.read.parquet(path).count() == n_after
     qs = emb.where("vec_id < 5")
-    got = query_ivf2_index(qs, path, k=10, n_probe=3, n_super_probe=2)
+    got = query_ivf_index(qs, path, k=10, n_probe=3, n_super_probe=2)
     want = cosine_topk_ivf2(
         emb, qs, k=10, n_cells=32, n_probe=3, n_super_probe=2,
         train_where="vec_id % 10 != 0 AND vec_id % 16 = 0",
@@ -489,3 +489,43 @@ def test_query_side_rejects_zero_norm_query_vector(spark, tmp_path):
         similarity.query_ivf_index(poisoned_queries, path, k=3, n_probe=2).collect()
     with pytest.raises(Exception, match="zero-norm|DIVIDE_BY_ZERO"):
         similarity.cosine_topk(_vec_df(spark, 32), poisoned_queries, k=3).collect()
+
+
+def test_index_reads_fall_back_to_inference_without_schema_sidecar(spark, tmp_path):
+    """Without ``<path>_schema`` (an index written before the pin
+    existed, or a crash between the data write and the pin) readers
+    infer the schema from the files and must see exactly what the
+    pinned read saw."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+        _read_index,
+        build_ivf_index,
+        query_ivf_index,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    path = str(tmp_path / "idx")
+    build_ivf_index(emb, path, n_cells=8, iters=2)
+    qs = emb.where("vec_id < 5")
+
+    def snapshot():
+        idx = _read_index(spark, path)
+        rows = sorted((r["vec_id"], r["cell"], tuple(r["embedding"])) for r in idx.collect())
+        hits = sorted(tuple(r) for r in query_ivf_index(qs, path, k=10, n_probe=3).collect())
+        return idx.schema, rows, hits
+
+    pinned = snapshot()
+    import os
+
+    os.remove(path + "_schema")
+    assert snapshot() == pinned
+
+
+def test_vec_identifier_guard_rejects_lambda_names_and_backticks():
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
+        _check_vec_identifier,
+    )
+
+    _check_vec_identifier("embedding")
+    for bad in ("__ivf_x", "emb`edding"):
+        with pytest.raises(ValueError, match="plain identifier"):
+            _check_vec_identifier(bad)

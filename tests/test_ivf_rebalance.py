@@ -225,27 +225,15 @@ def test_audit_is_deliberately_laxer_than_repair():
 
 
 # ---------------------------------------------------------------------
-# Hierarchical (IVF2) rebalance — the same split contract on the
-# two-level layout (r14): shared split arithmetic, cold cells
-# byte-identical, precomputed cn carried through bit-unchanged, fresh
-# 'b' cells inheriting their parent's supercell.
+# Hierarchical (IVF2) rebalance — the same split contract on an index
+# built with the two-level quantizer (r14): shared split arithmetic,
+# cold cells byte-identical, every vector carried through
+# bit-unchanged, fresh 'b' cells inheriting their parent's supercell.
 # ---------------------------------------------------------------------
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (  # noqa: E402
     build_ivf2_index,
-    query_ivf2_index,
-    rebalance_ivf2_index,
 )
-
-
-def _occupancy2(spark, path):
-    return {
-        int(r["cell"]): int(r["n"])
-        for r in spark.read.parquet(path)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
 
 
 def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_path):
@@ -253,14 +241,14 @@ def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_pat
     path = str(tmp_path / "idx2")
     build_ivf2_index(emb, path, n_cells=8, iters=2)
 
-    occ_before = _occupancy2(spark, path)
+    occ_before = _occupancy(spark, path)
     total, ncells = sum(occ_before.values()), len(occ_before)
     hot = {c for c, n in occ_before.items() if n * ncells > total}
     cold = set(occ_before) - hot
     assert hot, "fixture must have at least one over-mean cell"
     rows_before = {
-        int(r["neighbor_id"]): float(r["cn"])
-        for r in spark.read.parquet(path).select("neighbor_id", "cn").collect()
+        int(r["vec_id"]): list(r["embedding"])
+        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
     }
     cold_files_before = {c: _cell_files(path, c) for c in cold}
     supers_before = {
@@ -272,15 +260,15 @@ def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_pat
         for r in spark.read.parquet(path + "_supers").collect()
     )
 
-    stats = rebalance_ivf2_index(spark, path)
+    stats = rebalance_ivf_index(spark, path)
 
     assert sorted(stats["hot_cells"]) == sorted(hot)
-    occ_after = _occupancy2(spark, path)
+    occ_after = _occupancy(spark, path)
     assert sum(occ_after.values()) == total
-    # row conservation WITH the stored norm carried bit-unchanged
+    # row conservation WITH each stored vector carried bit-unchanged
     rows_after = {
-        int(r["neighbor_id"]): float(r["cn"])
-        for r in spark.read.parquet(path).select("neighbor_id", "cn").collect()
+        int(r["vec_id"]): list(r["embedding"])
+        for r in spark.read.parquet(path).select("vec_id", "embedding").collect()
     }
     assert rows_after == rows_before
     assert max(occ_after.values()) <= max(occ_before.values())
@@ -308,7 +296,7 @@ def test_ivf2_rebalance_splits_hot_cells_preserves_rows_and_norms(spark, tmp_pat
         == supers_sidecar_before
     )
     # still queryable with full k per query
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=5, n_probe=3, n_super_probe=2)
     per_query = {
         r["query_id"]: r["n"]
         for r in res.groupBy("query_id").agg(F.count(F.lit(1)).alias("n")).collect()
@@ -321,25 +309,25 @@ def test_ivf2_rebalance_is_deterministic_and_noop_when_uniform(spark, tmp_path):
     p1, p2 = str(tmp_path / "i1"), str(tmp_path / "i2")
     build_ivf2_index(emb, p1, n_cells=8, iters=2)
     build_ivf2_index(emb, p2, n_cells=8, iters=2)
-    s1 = rebalance_ivf2_index(spark, p1)
-    s2 = rebalance_ivf2_index(spark, p2)
+    s1 = rebalance_ivf_index(spark, p1)
+    s2 = rebalance_ivf_index(spark, p2)
     assert s1 == s2
     rows1 = sorted(
-        (int(r["cell"]), int(r["neighbor_id"]))
-        for r in spark.read.parquet(p1).select("cell", "neighbor_id").collect()
+        (int(r["cell"]), int(r["vec_id"]))
+        for r in spark.read.parquet(p1).select("cell", "vec_id").collect()
     )
     rows2 = sorted(
-        (int(r["cell"]), int(r["neighbor_id"]))
-        for r in spark.read.parquet(p2).select("cell", "neighbor_id").collect()
+        (int(r["cell"]), int(r["vec_id"]))
+        for r in spark.read.parquet(p2).select("cell", "vec_id").collect()
     )
     assert rows1 == rows2
     # a second repair on the already-balanced index must be a no-op
     # unless the split itself left an over-mean cell (possible when a
     # hot cell splits unevenly); either way it reports consistently
-    occ = _occupancy2(spark, p1)
+    occ = _occupancy(spark, p1)
     total, ncells = sum(occ.values()), len(occ)
     expect_hot = sorted(c for c, n in occ.items() if n * ncells > total)
-    s3 = rebalance_ivf2_index(spark, p1)
+    s3 = rebalance_ivf_index(spark, p1)
     assert s3["hot_cells"] == expect_hot
 
 

@@ -1,4 +1,4 @@
-"""update_in_ivf_index / update_in_ivf2_index + the atomic cell-swap
+"""update_in_ivf_index (both quantizers) + the atomic cell-swap
 recovery protocol — the round-15 closures of the two residuals the r14
 verdict named:
 
@@ -28,10 +28,8 @@ from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spar
     build_ivf_index,
     compact_ivf_index,
     delete_from_ivf_index,
-    query_ivf2_index,
     query_ivf_index,
     recover_ivf_index,
-    update_in_ivf2_index,
     update_in_ivf_index,
 )
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import (
@@ -51,19 +49,19 @@ def _files_by_cell(path):
     return out
 
 
-def _row_of(spark, path, vid, id_col="vec_id", vec_col="embedding"):
+def _row_of(spark, path, vid):
     rows = (
         spark.read.parquet(path)
-        .where(F.col(id_col) == vid)
-        .select(id_col, vec_col, "cell")
+        .where(F.col("vec_id") == vid)
+        .select("vec_id", "embedding", "cell")
         .collect()
     )
     return rows
 
 
-def _tomb_ids(spark, path, id_col="vec_id"):
+def _tomb_ids(spark, path):
     try:
-        return {int(r[id_col]) for r in spark.read.parquet(path + "_tombstones").collect()}
+        return {int(r["vec_id"]) for r in spark.read.parquet(path + "_tombstones").collect()}
     except Exception:
         return set()
 
@@ -224,18 +222,18 @@ def test_ivf2_update_replaces_vector_and_clears_debt(spark, tmp_path):
     path = str(tmp_path / "idx2")
     build_ivf2_index(emb, path, n_cells=16, iters=2, train_where="vec_id % 4 = 0")
     vid = 7
-    [old_row] = _row_of(spark, path, vid, id_col="neighbor_id", vec_col="c_vec")
-    stats = update_in_ivf2_index(_updated_batch(emb, vid), path)
+    [old_row] = _row_of(spark, path, vid)
+    stats = update_in_ivf_index(_updated_batch(emb, vid), path)
     assert set(stats["cells_rewritten"]) | set(stats["cells_removed"]) == {
         int(old_row["cell"])
     }
-    rows = _row_of(spark, path, vid, id_col="neighbor_id", vec_col="c_vec")
+    rows = _row_of(spark, path, vid)
     assert len(rows) == 1
-    old_emb = [float(x) for x in old_row["c_vec"]]
-    assert [float(x) for x in rows[0]["c_vec"]] == list(reversed(old_emb))
-    assert _tomb_ids(spark, path, id_col="neighbor_id") == set()
+    old_emb = [float(x) for x in old_row["embedding"]]
+    assert [float(x) for x in rows[0]["embedding"]] == list(reversed(old_emb))
+    assert _tomb_ids(spark, path) == set()
     # hierarchical query path serves full k with the id live again
-    res = query_ivf2_index(emb.where("vec_id < 3"), path, k=5)
+    res = query_ivf_index(emb.where("vec_id < 3"), path, k=5)
     assert res.groupBy("query_id").count().agg(F.min("count")).collect()[0][0] == 5
 
 
@@ -359,3 +357,23 @@ def test_maintenance_entry_points_self_heal_before_acting(spark, tmp_path):
     got = {int(r["vec_id"]) for r in a_rows.collect()}
     assert len(got & pre_crash_ids) == 1  # only the staged survivor
     assert all(v >= 400 for v in got - pre_crash_ids)
+
+
+def test_recovery_rollback_raises_when_staging_delete_fails(monkeypatch):
+    """The rolled-back branch checks the FS boolean like every other
+    swap step: a staging dir that cannot be deleted must raise, not
+    report a rollback that never happened."""
+    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
+        similarity as sim,
+    )
+
+    class _FS:
+        def exists(self, p):  # the staging dir exists, its intent does not
+            return not p.endswith("_intent.json")
+
+        def delete(self, p, recursive):
+            return False
+
+    monkeypatch.setattr(sim, "_hadoop_fs", lambda spark, path: (_FS(), path))
+    with pytest.raises(RuntimeError, match="delete failed"):
+        recover_ivf_index(None, "/idx")

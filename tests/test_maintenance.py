@@ -1,6 +1,7 @@
 """Compaction: fewer files, identical rows."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.maintenance import (
     compact_table,
@@ -63,11 +64,13 @@ def test_ivf_append_retry_is_idempotent(spark, tmp_path):
     assert after == before
 
 
-def test_ivf_append_batch_token_skips_retry_in_constant_work(spark, tmp_path):
+@pytest.mark.parametrize("layout", ["flat", "ivf2"])
+def test_ivf_append_batch_token_skips_retry_in_constant_work(spark, tmp_path, layout):
     """The 100 TB idempotency path: a retry presenting an
     already-recorded batch token is a no-op after one scan of the tiny
     _batches sidecar — it must not rewrite rows even with the
-    id-anti-join guard disabled (proving the token alone suffices)."""
+    id-anti-join guard disabled (proving the token alone suffices).
+    Holds for either quantizer: the append is one body."""
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
         similarity,
     )
@@ -76,7 +79,12 @@ def test_ivf_append_batch_token_skips_retry_in_constant_work(spark, tmp_path):
     train = emb.where("vec_id % 10 != 0")
     batch = emb.where("vec_id % 10 = 0")
     path = str(tmp_path / "ivf_tok")
-    similarity.build_ivf_index(train, path, n_cells=4, iters=1)
+    if layout == "flat":
+        similarity.build_ivf_index(train, path, n_cells=4, iters=1)
+    else:
+        similarity.build_ivf2_index(
+            train, path, n_cells=16, iters=1, train_where="vec_id % 16 = 0"
+        )
 
     similarity.append_to_ivf_index(
         batch, path, skip_existing_ids=False, batch_token="drop-2026-08-14"
@@ -166,34 +174,3 @@ def test_ivf_append_empty_token_sidecar_recovers(spark, tmp_path):
         batch, path, skip_existing_ids=False, batch_token="drop-2026-08-17"
     )
     assert spark.read.parquet(path).count() == before + batch.count()
-
-
-def test_ivf2_append_batch_token_skips_retry_in_constant_work(spark, tmp_path):
-    """The hierarchical append inherits the flat append's token
-    contract verbatim: a retry presenting a recorded token is a no-op
-    with the id-anti-join guard disabled, and a new token with
-    disjoint ids appends normally."""
-    from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators import (
-        similarity,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    path = str(tmp_path / "ivf2_tok")
-    similarity.build_ivf2_index(
-        emb.where("vec_id % 10 != 0"), path, n_cells=16, iters=1,
-        train_where="vec_id % 16 = 0",
-    )
-    batch = emb.where("vec_id % 10 = 0")
-    similarity.append_to_ivf2_index(
-        batch, path, skip_existing_ids=False, batch_token="drop-2026-08-15"
-    )
-    once = spark.read.parquet(path).count()
-    similarity.append_to_ivf2_index(
-        batch, path, skip_existing_ids=False, batch_token="drop-2026-08-15"
-    )
-    assert spark.read.parquet(path).count() == once
-    batch2 = emb.where("vec_id % 10 = 1")
-    similarity.append_to_ivf2_index(
-        batch2, path, skip_existing_ids=False, batch_token="drop-2026-08-16"
-    )
-    assert spark.read.parquet(path).count() == once + batch2.count()

@@ -1130,12 +1130,13 @@ def test_ivf2_persisted_query_scan_is_partition_pruned(spark, tmp_path):
     # contract — the probed member-cell ids land as a static PARTITION
     # filter on the hierarchical inverted-list scan — and the persisted
     # result must equal the in-plan cosine_topk_ivf2 with identical
-    # parameters (the parquet round trip is value-exact: same c_vec,
-    # same precomputed cn, shared probe/score devices).
+    # parameters (the parquet round trip is value-exact: same vector,
+    # the norm recomputed by the same expression, shared probe/score
+    # devices).
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.operators.similarity import (
         build_ivf2_index,
         cosine_topk_ivf2,
-        query_ivf2_index,
+        query_ivf_index,
     )
     from data_warehouse_and_bi_dashboards_for_iowa_alcoholic_beverages_division_spark.sources.tables import load_table
 
@@ -1143,7 +1144,7 @@ def test_ivf2_persisted_query_scan_is_partition_pruned(spark, tmp_path):
     path = str(tmp_path / "index2")
     build_ivf2_index(emb, path, n_cells=32, iters=2, train_where="vec_id % 16 = 0")
     qs = emb.where("vec_id < 5")
-    out = query_ivf2_index(qs, path, k=10, n_probe=3, n_super_probe=2)
+    out = query_ivf_index(qs, path, k=10, n_probe=3, n_super_probe=2)
     plan = plan_text(out)
     seg = plan.split("PartitionFilters: [")
     assert len(seg) > 1, "hierarchical inverted-list scan lost its partition filter"
